@@ -4,7 +4,7 @@ ABSENT in the reference (DataX has no relational operators, SURVEY.md
 §2.7); mandated by BASELINE.json:6: per (repo, path) keep only the
 highest-LSN event in a batch, collapsing I/U/D sequences.
 
-Two strategies, both exposed (tests assert equality):
+Three frame-level strategies, all exposed (tests assert equality):
 
 - ``window`` — the spec-literal form: ``row_number() OVER
   (PARTITION BY repo, path ORDER BY lsn DESC) = 1``. One full shuffle
@@ -16,13 +16,14 @@ Two strategies, both exposed (tests assert equality):
   every mapper instead of landing on one reducer — per-key skew is
   defused structurally, before salting (skew.py) is even needed.
   Still shuffles one full-payload row per (mapper, key).
-- ``join`` (engine default) — two-phase: aggregate only
-  ``(key, max(lsn))`` (a narrow shuffle of key+lsn, ~1% of payload
-  bytes for code content), then left-semi join the batch against the
-  winning (key, lsn) pairs. With the winner set broadcast (a CDC
-  batch's key set ≪ the table), the payload is NEVER shuffled at
-  dedup — its only shuffle is the final bucket-write repartition. At
-  10^10 events this halves total content bytes moved per batch.
+- ``join`` — two-phase: aggregate only ``(key, max(lsn))`` (a narrow
+  shuffle of key+lsn), then left-semi join the batch against the
+  broadcast winning (key, lsn) pairs.
+
+The engine's default (its ``dedup_strategy="join"``) is none of these
+but :func:`dedup_bucket_window`, for every batch size: the dedup runs
+inside the bucket write's own shuffle, so the payload moves once and
+no winner set is planned ahead of the write.
 """
 
 from __future__ import annotations
@@ -33,23 +34,9 @@ from pyspark.sql import functions as F
 KEY = ["repo", "path"]
 
 
-def latest_keys(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn") -> DataFrame:
-    """``(key..., max(lsn) AS lsn_col)`` winners — the narrow dedup core.
-
-    Map-side combined; the shuffle carries only key + lsn columns.
-    """
-    return df.groupBy(*key).agg(F.max(lsn_col).alias(lsn_col))
-
-
 def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
-                  strategy: str = "join", winners: DataFrame | None = None,
-                  broadcast_winners: bool = True) -> DataFrame:
-    """Keep only the max-LSN event per key; preserves input schema.
-
-    ``winners`` lets the caller pass a precomputed/persisted
-    :func:`latest_keys` frame (the engine reuses it for dirty-bucket
-    planning and the MERGE anti-join).
-    """
+                  strategy: str = "join") -> DataFrame:
+    """Keep only the max-LSN event per key; preserves input schema."""
     if strategy == "window":
         w = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
         return (
@@ -64,18 +51,14 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
         )
         return agg.select(*key, *[F.col(f"__top.{c}").alias(c) for c in payload])
     if strategy == "join":
-        w = winners if winners is not None else latest_keys(df, key, lsn_col)
-        if broadcast_winners:
-            w = F.broadcast(w)
-        semi = df.join(w, on=[*key, lsn_col], how="left_semi")
+        w = df.groupBy(*key).agg(F.max(lsn_col).alias(lsn_col))
+        semi = df.join(F.broadcast(w), on=[*key, lsn_col], how="left_semi")
         # A redelivered event ROW (same key AND same lsn appearing twice
         # in one batch — e.g. an at-least-once shipper landing a chunk
         # twice) would survive the semi-join in both copies; window/
         # maxby/bucket-window all collapse it. dropDuplicates keeps the
-        # strategies equivalent under duplicated input rows. Cost: one
-        # extra shuffle of the already-collapsed batch (≤ |keys| rows,
-        # and this path only runs below broadcast_key_limit) — bounded,
-        # and correctness is not input-invariant-conditional.
+        # strategies equivalent under duplicated input rows, at the
+        # cost of one extra shuffle of the already-collapsed batch.
         return semi.dropDuplicates([*key, lsn_col])
     raise ValueError(f"unknown dedup strategy: {strategy}")
 
@@ -84,9 +67,9 @@ def dedup_bucket_window(df: DataFrame, bucket_col: str = "__bucket",
                         num_partitions: int | None = None,
                         key: list[str] = KEY, lsn_col: str = "lsn",
                         subtask_col: str | None = None) -> DataFrame:
-    """Single-shuffle large-batch dedup, fused with bucket routing.
+    """Single-shuffle dedup, fused with bucket routing.
 
-    For batches too big to broadcast a winner set: repartition by the
+    The engine's default dedup, for every batch size: repartition by the
     storage bucket (each key lives in exactly one bucket), sort the
     partition by (key, lsn desc), and keep the first row of each key
     run via ``lag`` — a window PARTITIONED BY THE BUCKET, so Spark

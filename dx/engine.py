@@ -12,11 +12,9 @@ Per batch (SURVEY.md §3.4):
   2. events = changelog.filter(W < lsn ≤ W+Δ)                    [X1]
      — Catalyst pushes the range predicate to the parquet scan
   3. split at DDL boundaries; ALTER TABLE per DDL event          [X4]
-  4. per sub-range: max-LSN dedup [X2] — policy by batch size:
-     small (≤ broadcast_key_limit events): broadcast semi-join on
-     the narrow (key, max lsn) winner set — payload shuffles ONCE
-     (the bucket write); large: bucket-window dedup fused with the
-     write partitioning — still exactly one payload shuffle
+  4. per sub-range: max-LSN dedup [X2] — bucket-window dedup fused
+     with the write partitioning, whatever the batch size: exactly
+     one payload shuffle, no planning job ahead of the write
   5. normalize content + sha256, materialize evolved columns     [X7]
   6. skew [X6]: structural on the default paths (bucket-hash
      write spreads hot repos; maxby partial-combines hot keys);
@@ -44,7 +42,7 @@ from pyspark.sql import functions as F
 
 from dx import manifest as mf
 from dx import skew
-from dx.dedup import dedup_bucket_window, dedup_max_lsn, latest_keys
+from dx.dedup import dedup_bucket_window, dedup_max_lsn
 from dx.lake import KEY, LakeTable
 from dx.transforms import (
     content_sha_bin,
@@ -111,7 +109,6 @@ class ReplayEngine:
         metrics_path: str | None = None,
         merge_mode: str = "mor",
         compact_threshold: int = 8,
-        broadcast_key_limit: int = 2_000_000,
     ):
         self.spark = spark
         self.table = table
@@ -125,7 +122,6 @@ class ReplayEngine:
         self.metrics_path = metrics_path
         self.merge_mode = merge_mode
         self.compact_threshold = compact_threshold
-        self.broadcast_key_limit = broadcast_key_limit
         self._max_lsn: int | None = None
         self._ddls: list | None = None
 
@@ -190,11 +186,11 @@ class ReplayEngine:
         return sel
 
     def _prepare_changes_bucketed(self, events: DataFrame) -> DataFrame:
-        """Large-batch path: bucket-window dedup (dedup.py) — ONE
-        payload shuffle, fused with the write's bucket routing (the
-        write's repartition reuses this exchange), no winner broadcast,
-        no reduce-side payload hash. The shuffle is keyed by
-        (bucket, subtask) at WRITE_TASK_MULT×cores partitions so one
+        """Default (``join``) path, every batch size: bucket-window
+        dedup (dedup.py) — ONE payload shuffle, fused with the write's
+        bucket routing (the write's repartition reuses this exchange),
+        no winner set, no reduce-side payload hash. The shuffle is keyed
+        by (bucket, subtask) at WRITE_TASK_MULT×cores partitions so one
         hot/slow bucket can't straggle a cores-wide stage."""
         shuffle_n = self.table.write_partitions(True)
         data = self.table.with_subtask(
@@ -207,31 +203,20 @@ class ReplayEngine:
             *self._transform_sel(), F.col("__bucket"), F.col("__subtask")
         )
 
-    def _prepare_changes(self, events: DataFrame, winners: DataFrame | None = None,
-                         strategy: str | None = None) -> DataFrame:
-        """Dedup + vectorized payload transforms + evolved-column
-        materialization → the exact frame lake.merge expects.
-
-        With the default ``join`` strategy, ``winners`` is the cached
-        (repo, path, lsn) winner set: the payload is filtered by a
-        broadcast semi-join and flows to the bucket write with exactly
-        one shuffle total (the write repartition)."""
-        strategy = strategy or self.dedup_strategy
-        deduped = dedup_max_lsn(
-            events, strategy=strategy, winners=winners,
-            broadcast_winners=self.broadcast_keys,
-        )
+    def _prepare_changes(self, events: DataFrame) -> DataFrame:
+        """``maxby`` / ``window`` dedup + vectorized payload transforms
+        + evolved-column materialization → the exact frame lake.merge
+        expects."""
+        deduped = dedup_max_lsn(events, strategy=self.dedup_strategy)
         changes = deduped.select(*self._transform_sel())
-        if strategy != "window":
-            # X6 is structural on these paths: "join" never shuffles
-            # the payload by key at all (broadcast semi-join), "maxby"
-            # partial-combines a hot key on every mapper before its
-            # shuffle, and the only payload-wide shuffle left — the
-            # bucket write — is keyed by pmod(hash(repo, path)), which
-            # spreads a hot repo's paths uniformly. An explicit salt
-            # column would just add a second payload shuffle. The
-            # spec-literal "window" strategy below is the one shuffle
-            # that serializes a hot key, so it gets the salt.
+        if self.dedup_strategy != "window":
+            # X6 is structural here: "maxby" partial-combines a hot key
+            # on every mapper before its shuffle, and the bucket write
+            # is keyed by pmod(hash(repo, path)), which spreads a hot
+            # repo's paths uniformly. An explicit salt column would
+            # just add a second payload shuffle. The spec-literal
+            # "window" strategy below is the one shuffle that
+            # serializes a hot key, so it gets the salt.
             return changes
         hot = skew.hot_repos(deduped, self.salt_threshold)
         if hot:
@@ -326,64 +311,28 @@ class ReplayEngine:
         # write (its own thread submits the Spark job; FIFO interleaves
         # the small agg with the big write) instead of serially ahead
         # of it — the rows are only needed at snapshot-commit time, so
-        # merge() takes a callable it resolves after the write. Path
-        # choice can't wait for the exact count, so it uses the LSN
-        # range width — an upper bound that equals n_events on dense
-        # changelogs (gaps only make a small batch take the bucketed
-        # path, never the reverse at meaningful scale).
+        # merge() takes a callable it resolves after the write. The
+        # default strategy dedups inside the write's own shuffle, so no
+        # planning job runs ahead of the write at any batch size.
         from concurrent.futures import ThreadPoolExecutor
 
         pool = ThreadPoolExecutor(max_workers=1)
         lineage_fut = pool.submit(self._collect_lineage, events)
-        size_bound = hi - lo
-        winners = None
+        bucketed = self.dedup_strategy == "join"
         try:
-            if self.dedup_strategy == "join" and size_bound > self.broadcast_key_limit:
-                # huge batch: building a broadcast hash of the winner
-                # set would serialize the driver — take the
-                # single-shuffle bucket-window path instead.
-                changes = self._prepare_changes_bucketed(events)
-                sid = self.table.merge(
-                    changes,
-                    batch_id=batch_id,
-                    watermark_hi=hi,
-                    lineage=lineage_fut.result,
-                    broadcast_keys=False,
-                    crash_after_commit=crash_after_commit,
-                    mode=self.merge_mode,
-                )
-            elif self.dedup_strategy == "join":
-                # the narrow winner set (key + lsn) drives dedup, dirty-
-                # bucket planning, the anti-join, and the change count —
-                # the payload frame is evaluated once, in the write.
-                winners = latest_keys(events).persist()
-                n_keys = winners.count()
-                changes = self._prepare_changes(events, winners)
-                sid = self.table.merge(
-                    changes,
-                    batch_id=batch_id,
-                    watermark_hi=hi,
-                    lineage=lineage_fut.result,
-                    broadcast_keys=self.broadcast_keys,
-                    crash_after_commit=crash_after_commit,
-                    keys=winners,
-                    change_rows=n_keys,
-                    mode=self.merge_mode,
-                )
-            else:
-                changes = self._prepare_changes(events)
-                sid = self.table.merge(
-                    changes,
-                    batch_id=batch_id,
-                    watermark_hi=hi,
-                    lineage=lineage_fut.result,
-                    broadcast_keys=self.broadcast_keys,
-                    crash_after_commit=crash_after_commit,
-                    mode=self.merge_mode,
-                )
+            sid = self.table.merge(
+                self._prepare_changes_bucketed(events) if bucketed
+                else self._prepare_changes(events),
+                batch_id=batch_id,
+                watermark_hi=hi,
+                lineage=lineage_fut.result,
+                # a bucketed batch's key set is unbounded: never force
+                # its broadcast (CoW anti-join); AQE still may
+                broadcast_keys=self.broadcast_keys and not bucketed,
+                crash_after_commit=crash_after_commit,
+                mode=self.merge_mode,
+            )
         finally:
-            if winners is not None:
-                winners.unpersist()
             pool.shutdown(wait=False)
         lineage_rows = lineage_fut.result()
         n_events = sum(r["row_count"] for r in lineage_rows)

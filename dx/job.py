@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dx import transforms as TR
+from dx.session import observed
 from dx.sources import (
     ColumnSpec,
     FileReaderConfig,
@@ -320,7 +321,7 @@ def run_job(spark: SparkSession, config: dict) -> dict:
             df = df.repartition(channels)  # R3: channel count → parallelism
         _sql_hooks(spark, wp.get("preSql"))   # W4: truncate-before-load etc.
         _write(df, content["writer"])
-        got = obs.get  # resolved by the write action — no extra pass
+        got = observed(obs)  # resolved by the write action — no extra pass
         total = int(got.get("total") or 0)
         n_dirty = int(got.get("dirty") or 0)
         _check_error_limit(err_limit, n_dirty, total)

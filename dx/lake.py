@@ -60,6 +60,8 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dx.session import observed
+
 BASE_COLUMNS = [
     ("repo", "string"),
     ("path", "string"),
@@ -769,7 +771,7 @@ class LakeTable:
             obs, F.count(F.lit(1)).alias("rows")
         )
         files = self._write_buckets(stored, sid)
-        row_count = int(obs.get["rows"]) if files else 0
+        row_count = int(observed(obs)["rows"]) if files else 0
         snap["files"] = files
         snap["row_count"] = row_count
         snap["file_stats"] = self._collect_file_stats(files)
@@ -784,8 +786,6 @@ class LakeTable:
         lineage: list[dict] | None = None,
         broadcast_keys: bool = True,
         crash_after_commit: bool = False,
-        keys: DataFrame | None = None,
-        change_rows: int | None = None,
         mode: str = "cow",
         update_mode: str = "full",
     ) -> str:
@@ -817,18 +817,14 @@ class LakeTable:
         exactly when ``content`` is NULL, so the sha always pairs with
         whichever content value survives.
 
-        ``keys`` (optional): the deduped change-key set as a *small*
-        DataFrame with columns KEY. When given, dirty-bucket planning,
-        the anti-join, and the change count all run against it — the
-        full ``changes`` frame (which carries payload content) is then
-        evaluated exactly ONCE, in the bucket write. When absent, the
-        planning frames are derived as NARROW projections of
-        ``changes`` (key + bucket columns only — Catalyst prunes the
-        payload out of those re-scans); the payload is still never
-        persisted and still materializes exactly once, in the write.
-        Full-frame persist() here was measured 5-10× slower on multi-GB
-        batches (defeats column pruning, thrashes GC) — see the module
-        lesson; the narrow re-scan is the 100 TB shape.
+        The planning frames (dirty buckets, anti-join keys, change
+        count) are NARROW projections of ``changes`` (key + bucket
+        columns only — Catalyst prunes the payload out of those
+        re-scans); the payload is never persisted and materializes
+        exactly once, in the write. Full-frame persist() here was
+        measured 5-10× slower on multi-GB batches (defeats column
+        pruning, thrashes GC) — see the module lesson; the narrow
+        re-scan is the 100 TB shape.
         """
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
@@ -840,22 +836,16 @@ class LakeTable:
         if mode == "mor":
             return self._merge_mor(
                 changes, batch_id, watermark_hi, lineage=lineage,
-                crash_after_commit=crash_after_commit, keys=keys,
-                change_rows=change_rows,
+                crash_after_commit=crash_after_commit,
             )
         meta = self.meta()
         cols = self.columns()
 
         if "__bucket" not in changes.columns:
             changes = changes.withColumn("__bucket", self.bucket_expr())
-        if keys is None:
-            key_set = changes.select(*KEY)  # narrow: payload pruned
-            bucket_src = changes.select("__bucket")
-        else:
-            key_set = keys.select(*KEY)
-            bucket_src = key_set.select(self.bucket_expr().alias("__bucket"))
+        key_set = changes.select(*KEY)  # narrow: payload pruned
         dirty = sorted(
-            r[0] for r in bucket_src.distinct().collect()
+            r[0] for r in changes.select("__bucket").distinct().collect()
         )
         dirty_s = [str(b) for b in dirty]
         old = self._bucket_state(dirty_s, cols).withColumn(
@@ -930,9 +920,8 @@ class LakeTable:
             F.col("__bucket"),
         ).unionByName(upserts)
 
-        if change_rows is None:
-            # narrow count (key columns only) — never a payload pass
-            change_rows = (keys if keys is not None else key_set).count()
+        # narrow count (key columns only) — never a payload pass
+        change_rows = key_set.count()
         snap = self._child(
             meta, batch_id,
             lineage=[],  # resolved after the write (may be a Future)
@@ -976,8 +965,6 @@ class LakeTable:
         watermark_hi: int,
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
-        keys: DataFrame | None = None,
-        change_rows: int | None = None,
     ) -> str:
         """Merge-on-read apply: append the batch's deduped change rows
         (D rows become ``_op='D'`` tombstones) as per-bucket delta
@@ -1009,16 +996,14 @@ class LakeTable:
         # parquet-footer read job.
         from pyspark.sql import Observation
 
-        obs = Observation() if change_rows is None else None
-        if obs is not None:
-            stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
+        obs = Observation()
+        stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
         new_files = self._write_buckets(stored, sid)
         deltas = {b: list(fl) for b, fl in meta.get("deltas", {}).items()}
         for b, fl in new_files.items():
             deltas.setdefault(b, []).extend(fl)
 
-        if change_rows is None:
-            change_rows = int(obs.get["rows"]) if new_files else 0
+        change_rows = int(observed(obs)["rows"]) if new_files else 0
         snap["lineage"] = _resolve_lineage(lineage)
         snap["deltas"] = deltas
         snap["file_stats"] = self._rebuild_file_stats(

@@ -7,10 +7,10 @@ SQL oracle. Determinism rules are the module docstring of
 dx/pipelines/__init__.py (md5 hashing, integer quantization, explicit
 tie-breaks).
 
-``td_multimodal_decode`` has NO oracle on purpose: its point is the
-mapInPandas binary plumbing; the driver records a rows-only check.
-``td_multimodal_meta`` covers the same metadata math through a pure
-SQL-expressible path so the values themselves are still oracle-gated.
+``td_multimodal_decode`` runs the mapInPandas binary plumbing and is
+hash-oracled like the rest: its oracle reproduces the decoder's
+metadata arithmetic and md5 fingerprint. ``td_multimodal_meta``
+covers the same metadata math through a pure SQL-expressible path.
 """
 
 from __future__ import annotations

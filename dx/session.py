@@ -165,3 +165,33 @@ def get_spark(
             stacklevel=2,
         )
     return spark
+
+
+# Upper bound on waiting for an Observation's metrics. They arrive on
+# Spark's listener bus after the observed action returns, normally in
+# milliseconds; a metric that raises while being evaluated never
+# arrives at all (the listener throws, the JVM promise is never
+# completed) and an unbounded Observation.get blocks forever.
+OBSERVATION_WAIT_S = 120.0
+
+
+def observed(obs) -> dict:
+    """``obs.get``, but raises ``TimeoutError`` instead of hanging when
+    the metrics do not arrive within :data:`OBSERVATION_WAIT_S`. Call
+    it only after the observed DataFrame's action has run."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = obs._jvm
+    bound = jvm.scala.concurrent.duration.Duration.create(
+        int(OBSERVATION_WAIT_S * 1000), "milliseconds"
+    )
+    try:
+        jvm.org.apache.spark.util.SparkThreadUtils.awaitResult(obs._jo.future(), bound)
+    except Py4JJavaError as e:
+        if "TimeoutException" not in e.java_exception.getClass().getName():
+            raise
+        raise TimeoutError(
+            f"observed metrics not delivered within {OBSERVATION_WAIT_S}s — "
+            "a metric most likely failed to evaluate (see the Spark log)"
+        ) from e
+    return obs.get

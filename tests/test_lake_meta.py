@@ -5,16 +5,22 @@
   the HEAD only);
 - expire_snapshots GC bounds metadata/data growth while keeping the
   retained window time-travelable and replay convergent;
-- the cow merge path never persists the payload frame (the measured
-  5-10× anti-pattern), even on the large-batch no-keys branch.
+- the merge paths never persist the payload frame (the measured
+  5-10× anti-pattern), and the default MoR batch moves its payload
+  through exactly one shuffle;
+- a metric that fails while being evaluated fails its batch instead of
+  hanging it, and a replay converges.
 """
 
 from __future__ import annotations
 
 import os
 
-import pyspark.sql.dataframe as psd
+import pyspark.sql.classic.dataframe as pcd
+import pytest
+from pyspark.sql import functions as F
 
+from dx import session
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
 from dx.generator import gen_changelog, gen_seed_table
 from dx.lake import LakeTable
@@ -78,20 +84,26 @@ def test_expire_snapshots_gc(spark, tmp_path):
         == state_hash(expected)
 
 
-def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
-    """broadcast_key_limit=0 forces the no-keys bucket-window branch;
-    with merge_mode='cow' this used to persist() the full payload
-    (VERDICT r1 'what's wrong' #2). Now NO DataFrame.persist happens
-    anywhere on that path, and the result still matches the oracle."""
+@pytest.fixture
+def persist_calls(monkeypatch) -> list[str]:
+    """Columns of every DataFrame.persist call made while the test runs
+    (patched on the classic DataFrame class that sessions hand out)."""
     calls: list[str] = []
-    orig = psd.DataFrame.persist
+    orig = pcd.DataFrame.persist
 
     def spy(self, *a, **kw):
         calls.append(str(self.columns))
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(psd.DataFrame, "persist", spy)
+    monkeypatch.setattr(pcd.DataFrame, "persist", spy)
+    return calls
 
+
+def test_cow_replay_never_persists_payload(spark, tmp_path, persist_calls):
+    """With merge_mode='cow' the bucket-window path used to persist()
+    the full payload (VERDICT r1 'what's wrong' #2). Now NO
+    DataFrame.persist happens anywhere on the default CoW path, and the
+    result still matches the oracle."""
     seed_df = gen_seed_table(n_repos=2, paths_per_repo=12, seed=13)
     changelog = gen_changelog(seed_df, n_events=500, seed=13)
     expected = replay(seed_df, changelog)
@@ -100,10 +112,89 @@ def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     seed_lake(spark, table, seed_df)
     ReplayEngine(
         spark, table, changelog_from_pandas(spark, changelog),
-        delta=250, merge_mode="cow", broadcast_key_limit=0,
+        delta=250, merge_mode="cow",
     ).run()
 
-    assert calls == [], f"unexpected persist() of {calls}"
+    assert persist_calls == [], f"unexpected persist() of {persist_calls}"
+    assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
+        == state_hash(expected)
+
+
+def _executed_writes(spark) -> dict[int, str]:
+    """{SQL execution id: final (post-AQE) physical plan} of every
+    parquet write in Spark's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = {}
+    for i in range(runs.size()):
+        run = runs.apply(i)
+        plan = run.physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan:
+            plans[run.executionId()] = plan.split("+- == Initial Plan ==")[0]
+    return plans
+
+
+def test_default_mor_batch_is_one_shuffle_no_persist(spark, tmp_path, persist_calls):
+    """A steady-shaped replay (small MoR micro-batches, every engine
+    setting at its default) plans nothing ahead of the write: no
+    persist() of a winner set, and each batch's write, as executed,
+    moves the payload through exactly ONE Exchange — the fused
+    dedup/bucket shuffle."""
+    seed_df = gen_seed_table(n_repos=3, paths_per_repo=20, seed=17)
+    changelog = gen_changelog(seed_df, n_events=900, seed=17)
+    expected = replay(seed_df, changelog)
+    table = LakeTable.create(spark, str(tmp_path / "steady"), n_buckets=8)
+    seed_lake(spark, table, seed_df)
+    before = _executed_writes(spark)
+
+    out = ReplayEngine(spark, table, changelog_from_pandas(spark, changelog),
+                       delta=300).run()
+
+    assert persist_calls == [], f"unexpected persist() of {persist_calls}"
+    plans = [p for i, p in _executed_writes(spark).items() if i not in before]
+    assert len([m for m in out if m.applied_rows]) >= 3
+    assert len(plans) == len([m for m in out if m.applied_rows])
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+    assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
+        == state_hash(expected)
+
+
+def test_failing_metric_raises_instead_of_hanging(spark, tmp_path, monkeypatch):
+    """An observed metric that raises while being evaluated never
+    delivers its row; the wait for it is bounded, so the seed and the
+    batch fail, the pointer stays where it was, and a replay without
+    the fault converges to the oracle."""
+    seed_df = gen_seed_table(n_repos=2, paths_per_repo=10, seed=23)
+    changelog = gen_changelog(seed_df, n_events=300, seed=23)
+    expected = replay(seed_df, changelog)
+    table = LakeTable.create(spark, str(tmp_path / "obs"), n_buckets=4)
+    orig = pcd.DataFrame.observe
+
+    def failing(self, obs, *exprs):
+        boom = F.when(F.count(F.lit(1)) > 0, F.raise_error("injected metric failure"))
+        return orig(self, obs, boom.alias("rows"))
+
+    def inject():
+        monkeypatch.setattr(pcd.DataFrame, "observe", failing)
+        monkeypatch.setattr(session, "OBSERVATION_WAIT_S", 5.0)
+
+    inject()
+    with pytest.raises(TimeoutError):
+        seed_lake(spark, table, seed_df)
+    assert table.meta()["snapshot_id"] == "s0"
+    monkeypatch.undo()
+    seed_lake(spark, table, seed_df)
+    head = table.meta()["snapshot_id"]
+
+    inject()
+    with pytest.raises(TimeoutError):
+        ReplayEngine(spark, table, changelog_from_pandas(spark, changelog),
+                     delta=150).run()
+    assert table.meta()["snapshot_id"] == head
+    monkeypatch.undo()
+    ReplayEngine(spark, table, changelog_from_pandas(spark, changelog),
+                 delta=150).run()
     assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
         == state_hash(expected)
 

@@ -58,8 +58,6 @@ def test_any_config_converges_to_oracle(spark, tmp_path_factory, case):
         delta=case["delta"],
         dedup_strategy=case["strategy"],
         merge_mode=case["merge_mode"],
-        # exercise the large-batch bucket path on some examples
-        broadcast_key_limit=0 if case["seed"] % 3 == 0 and case["strategy"] == "join" else 2_000_000,
     ).run()
 
     expected = replay(seed_df, chg)  # oracle always sees LSN order

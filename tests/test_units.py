@@ -261,7 +261,7 @@ def test_iceberg_backend_signature_parity():
 
 
 def test_bucket_write_fuses_into_dedup_exchange(spark, tmp_path):
-    """Plan-shape guard: the large-batch path's write repartition must
+    """Plan-shape guard: the default dedup path's write repartition must
     collapse into the bucket-window dedup exchange — exactly ONE
     Exchange (payload shuffle) end-to-end, keyed by (bucket, subtask).
     A second Exchange here would double the payload bytes moved per
@@ -275,8 +275,7 @@ def test_bucket_write_fuses_into_dedup_exchange(spark, tmp_path):
     seed_df = gen_seed_table(2, 10, seed=3)
     chg = gen_changelog(seed_df, n_events=300, seed=3)
     table = LakeTable.create(spark, str(tmp_path / "fuse"), n_buckets=8)
-    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg),
-                       broadcast_key_limit=0)
+    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg))
     events = changelog_from_pandas(spark, chg).filter("op != 'DDL'")
     changes = eng._prepare_changes_bucketed(events)
     stored = table._stored_select(
