@@ -4,7 +4,7 @@ ABSENT in the reference (DataX has no relational operators, SURVEY.md
 §2.7); mandated by BASELINE.json:6: per (repo, path) keep only the
 highest-LSN event in a batch, collapsing I/U/D sequences.
 
-Three frame-level strategies, all exposed (tests assert equality):
+Two frame-level strategies (tests assert they agree):
 
 - ``window`` — the spec-literal form: ``row_number() OVER
   (PARTITION BY repo, path ORDER BY lsn DESC) = 1``. One full shuffle
@@ -16,14 +16,12 @@ Three frame-level strategies, all exposed (tests assert equality):
   every mapper instead of landing on one reducer — per-key skew is
   defused structurally, before salting (skew.py) is even needed.
   Still shuffles one full-payload row per (mapper, key).
-- ``join`` — two-phase: aggregate only ``(key, max(lsn))`` (a narrow
-  shuffle of key+lsn), then left-semi join the batch against the
-  broadcast winning (key, lsn) pairs.
 
-The engine's default (its ``dedup_strategy="join"``) is none of these
-but :func:`dedup_bucket_window`, for every batch size: the dedup runs
-inside the bucket write's own shuffle, so the payload moves once and
-no winner set is planned ahead of the write.
+The engine's default (its ``dedup_strategy="join"``, a name kept for
+the CLI) is neither of these but :func:`dedup_bucket_window`, for
+every batch size: the dedup runs inside the bucket write's own
+shuffle, so the payload moves once and no winner set is planned ahead
+of the write.
 """
 
 from __future__ import annotations
@@ -35,7 +33,7 @@ KEY = ["repo", "path"]
 
 
 def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
-                  strategy: str = "join") -> DataFrame:
+                  strategy: str = "maxby") -> DataFrame:
     """Keep only the max-LSN event per key; preserves input schema."""
     if strategy == "window":
         w = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
@@ -50,16 +48,6 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
             F.max_by(F.struct(*payload), F.col(lsn_col)).alias("__top")
         )
         return agg.select(*key, *[F.col(f"__top.{c}").alias(c) for c in payload])
-    if strategy == "join":
-        w = df.groupBy(*key).agg(F.max(lsn_col).alias(lsn_col))
-        semi = df.join(F.broadcast(w), on=[*key, lsn_col], how="left_semi")
-        # A redelivered event ROW (same key AND same lsn appearing twice
-        # in one batch — e.g. an at-least-once shipper landing a chunk
-        # twice) would survive the semi-join in both copies; window/
-        # maxby/bucket-window all collapse it. dropDuplicates keeps the
-        # strategies equivalent under duplicated input rows, at the
-        # cost of one extra shuffle of the already-collapsed batch.
-        return semi.dropDuplicates([*key, lsn_col])
     raise ValueError(f"unknown dedup strategy: {strategy}")
 
 

@@ -105,7 +105,6 @@ class ReplayEngine:
         salt_threshold: float = 0.10,
         n_salts: int = 16,
         use_pandas_udfs: bool = False,
-        broadcast_keys: bool = True,
         metrics_path: str | None = None,
         merge_mode: str = "mor",
         compact_threshold: int = 8,
@@ -118,7 +117,6 @@ class ReplayEngine:
         self.salt_threshold = salt_threshold
         self.n_salts = n_salts
         self.use_pandas_udfs = use_pandas_udfs
-        self.broadcast_keys = broadcast_keys
         self.metrics_path = metrics_path
         self.merge_mode = merge_mode
         self.compact_threshold = compact_threshold
@@ -318,17 +316,14 @@ class ReplayEngine:
 
         pool = ThreadPoolExecutor(max_workers=1)
         lineage_fut = pool.submit(self._collect_lineage, events)
-        bucketed = self.dedup_strategy == "join"
         try:
             sid = self.table.merge(
-                self._prepare_changes_bucketed(events) if bucketed
+                self._prepare_changes_bucketed(events)
+                if self.dedup_strategy == "join"
                 else self._prepare_changes(events),
                 batch_id=batch_id,
                 watermark_hi=hi,
                 lineage=lineage_fut.result,
-                # a bucketed batch's key set is unbounded: never force
-                # its broadcast (CoW anti-join); AQE still may
-                broadcast_keys=self.broadcast_keys and not bucketed,
                 crash_after_commit=crash_after_commit,
                 mode=self.merge_mode,
             )

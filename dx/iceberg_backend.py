@@ -18,7 +18,7 @@ created with:
 Surface parity: every method below matches the signature and column
 contract of ``dx.lake.LakeTable`` **as ReplayEngine actually invokes
 it** (``merge(changes, batch_id=, watermark_hi=, lineage=,
-broadcast_keys=, crash_after_commit=, mode=)``,
+crash_after_commit=, mode=)``,
 ``alter(..., batch_id=, at_lsn=)``, ``watermark()``,
 ``checkpoint_watermark()``, ``delta_depth()``, ``compact(buckets)``,
 ``meta()``, ``bucket_expr()``) — tests/test_units.py asserts the
@@ -214,7 +214,6 @@ class IcebergTable:
         batch_id: str,
         watermark_hi: int,
         lineage: list[dict] | None = None,
-        broadcast_keys: bool = True,
         crash_after_commit: bool = False,
         mode: str = "mor",
         update_mode: str = "full",
@@ -226,23 +225,19 @@ class IcebergTable:
         (X2), columns = logical schema + ``op`` + ``_content_sha`` +
         ``_lsn`` (+ optional ``__bucket`` planning column, dropped —
         Iceberg routes rows via its own bucket transform).
-        ``broadcast_keys`` is ACCEPTED FOR SIGNATURE PARITY BUT NOT
-        APPLIED to the source frame: broadcasting a payload-bearing
-        change frame (multi-KB ``content`` per row, one row per changed
-        key) can blow the broadcast size limit or the heap that builds
-        the broadcast — the class of failure LakeTable avoids by only
-        ever broadcasting the narrow (repo, path) key projection.
+        The source frame is never broadcast: it carries the payload
+        (multi-KB ``content`` per row), which can blow the broadcast
+        size limit or the heap that builds the broadcast — LakeTable
+        only ever broadcasts the narrow (repo, path) key projection.
         Iceberg's MERGE already prunes target files via partition +
-        column stats, so the hint buys nothing the engine needs.
+        column stats.
         ``mode`` is fixed at table level (write.merge.mode property) —
         per-batch override would be an ALTER, deliberately not done
         mid-stream. ``crash_after_commit`` is a sandbox test hook; a
         real commit cannot inject a crash, so it is ignored.
         """
-        # table-level setting / test hook; broadcast_keys intentionally
-        # unused — never broadcast the payload-bearing source frame
-        # (see docstring)
-        del mode, crash_after_commit, broadcast_keys
+        # table-level setting / test hook (see docstring)
+        del mode, crash_after_commit
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
         src = changes.drop("__bucket") if "__bucket" in changes.columns else changes

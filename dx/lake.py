@@ -122,6 +122,13 @@ APPLIED_BATCH_CAP = 4096
 SUBTASK_SPREAD = 8
 WRITE_TASK_MULT = 4
 
+# Copy-on-write merges broadcast the batch's narrow (repo, path) key set
+# to the anti-join against the dirty buckets' stored state, so the
+# stored side never shuffles, as long as the batch changes at most this
+# many keys. Past it the driver-built broadcast hash is the bottleneck,
+# and a shuffled join scales better.
+BROADCAST_KEY_ROWS = 2_000_000
+
 
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 32):
@@ -784,7 +791,6 @@ class LakeTable:
         batch_id: str,
         watermark_hi: int,
         lineage: list[dict] | None = None,
-        broadcast_keys: bool = True,
         crash_after_commit: bool = False,
         mode: str = "cow",
         update_mode: str = "full",
@@ -797,11 +803,13 @@ class LakeTable:
         matched ∧ op∈{I,U} → UPDATE; not-matched ∧ op∈{I,U} → INSERT;
         matched ∧ op=D → DELETE; not-matched ∧ D → no-op.
 
-        Physical plan: dirty buckets = distinct bucket ids of changes
-        (collect of ≤ n_buckets ints); only those buckets' files are
-        read; untouched rows survive via an anti-join on the changed
-        keys (broadcast when the batch is small); clean buckets carry
-        forward by file reference — zero IO.
+        Physical plan: one planning job counts the change rows per
+        bucket (collect of ≤ n_buckets pairs), which yields both the
+        dirty buckets and the change count; only the dirty buckets'
+        files are read; untouched rows survive via an anti-join on the
+        changed keys, broadcast when the batch changes at most
+        BROADCAST_KEY_ROWS keys; clean buckets carry forward by file
+        reference — zero IO.
 
         ``crash_after_commit`` is a test hook (T3b): raises right
         after the atomic pointer swap to simulate dying before any
@@ -817,8 +825,8 @@ class LakeTable:
         exactly when ``content`` is NULL, so the sha always pairs with
         whichever content value survives.
 
-        The planning frames (dirty buckets, anti-join keys, change
-        count) are NARROW projections of ``changes`` (key + bucket
+        The planning frames (per-bucket change count, anti-join keys)
+        are NARROW projections of ``changes`` (key + bucket
         columns only — Catalyst prunes the payload out of those
         re-scans); the payload is never persisted and materializes
         exactly once, in the write. Full-frame persist() here was
@@ -843,26 +851,29 @@ class LakeTable:
 
         if "__bucket" not in changes.columns:
             changes = changes.withColumn("__bucket", self.bucket_expr())
-        key_set = changes.select(*KEY)  # narrow: payload pruned
-        dirty = sorted(
-            r[0] for r in changes.select("__bucket").distinct().collect()
-        )
+        # changes holds one row per key, so the per-bucket row counts
+        # give the dirty buckets and the change count in one narrow job
+        per_bucket = changes.groupBy("__bucket").count().collect()
+        dirty = sorted(r[0] for r in per_bucket)
+        change_rows = sum(r[1] for r in per_bucket)
         dirty_s = [str(b) for b in dirty]
         old = self._bucket_state(dirty_s, cols).withColumn(
             "__bucket", self.bucket_expr()
         )
 
+        key_set = changes.select(*KEY)  # narrow: payload pruned
         key_bounds_src = key_set
-        if broadcast_keys:
+        if change_rows <= BROADCAST_KEY_ROWS:
             key_set = F.broadcast(key_set)
         survivors = old.join(key_set, on=KEY, how="left_anti")
         if update_mode == "partial":
             # Matched rows need the stored values to coalesce into.
-            # old is pruned to the batch's keys FIRST (the same
-            # broadcast key set the anti-join uses, so the big stored
-            # side never shuffles); the then-tiny hit set joins the
-            # folded changes. Two pruned scans of the dirty buckets
-            # beat one scan + a full shuffle of their state.
+            # old is pruned to the batch's keys FIRST (the same key
+            # set the anti-join uses, broadcast for a small batch, so
+            # the big stored side never shuffles); the then-tiny hit
+            # set joins the folded changes. Two pruned scans of the
+            # dirty buckets beat one scan + a full shuffle of their
+            # state.
             # The hit-side scan additionally skips FILES via the
             # snapshot's per-file key bounds (one tiny agg over the
             # key set — VERDICT r4 #4): only files whose (repo, path)
@@ -920,8 +931,6 @@ class LakeTable:
             F.col("__bucket"),
         ).unionByName(upserts)
 
-        # narrow count (key columns only) — never a payload pass
-        change_rows = key_set.count()
         snap = self._child(
             meta, batch_id,
             lineage=[],  # resolved after the write (may be a Future)

@@ -195,3 +195,18 @@ def observed(obs) -> dict:
             "a metric most likely failed to evaluate (see the Spark log)"
         ) from e
     return obs.get
+
+
+def executed_write_plans(spark) -> dict[int, str]:
+    """{SQL execution id: final (post-AQE) physical plan} of every
+    parquet write in Spark's SQL status store — the plans as they ran,
+    which a DataFrame's own ``executedPlan`` does not show for a write."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = {}
+    for i in range(runs.size()):
+        run = runs.apply(i)
+        plan = run.physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan:
+            plans[run.executionId()] = plan.split("+- == Initial Plan ==")[0]
+    return plans

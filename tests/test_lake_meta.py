@@ -15,6 +15,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pyspark.sql.classic.dataframe as pcd
 import pytest
@@ -102,36 +103,30 @@ def persist_calls(monkeypatch) -> list[str]:
 def test_cow_replay_never_persists_payload(spark, tmp_path, persist_calls):
     """With merge_mode='cow' the bucket-window path used to persist()
     the full payload (VERDICT r1 'what's wrong' #2). Now NO
-    DataFrame.persist happens anywhere on the default CoW path, and the
-    result still matches the oracle."""
+    DataFrame.persist happens anywhere on the default CoW path, each
+    small batch's anti-join broadcasts its key set (the stored state
+    never shuffles), and the result still matches the oracle."""
     seed_df = gen_seed_table(n_repos=2, paths_per_repo=12, seed=13)
     changelog = gen_changelog(seed_df, n_events=500, seed=13)
     expected = replay(seed_df, changelog)
 
     table = LakeTable.create(spark, str(tmp_path / "cow"), n_buckets=4)
     seed_lake(spark, table, seed_df)
+    before = session.executed_write_plans(spark)
     ReplayEngine(
         spark, table, changelog_from_pandas(spark, changelog),
         delta=250, merge_mode="cow",
     ).run()
 
     assert persist_calls == [], f"unexpected persist() of {persist_calls}"
+    plans = [p for i, p in session.executed_write_plans(spark).items()
+             if i not in before]
+    assert plans
+    for plan in plans:
+        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
+        assert "SortMergeJoin" not in plan, plan
     assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
         == state_hash(expected)
-
-
-def _executed_writes(spark) -> dict[int, str]:
-    """{SQL execution id: final (post-AQE) physical plan} of every
-    parquet write in Spark's SQL status store."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = {}
-    for i in range(runs.size()):
-        run = runs.apply(i)
-        plan = run.physicalPlanDescription()
-        if "InsertIntoHadoopFsRelationCommand" in plan:
-            plans[run.executionId()] = plan.split("+- == Initial Plan ==")[0]
-    return plans
 
 
 def test_default_mor_batch_is_one_shuffle_no_persist(spark, tmp_path, persist_calls):
@@ -145,13 +140,14 @@ def test_default_mor_batch_is_one_shuffle_no_persist(spark, tmp_path, persist_ca
     expected = replay(seed_df, changelog)
     table = LakeTable.create(spark, str(tmp_path / "steady"), n_buckets=8)
     seed_lake(spark, table, seed_df)
-    before = _executed_writes(spark)
+    before = session.executed_write_plans(spark)
 
     out = ReplayEngine(spark, table, changelog_from_pandas(spark, changelog),
                        delta=300).run()
 
     assert persist_calls == [], f"unexpected persist() of {persist_calls}"
-    plans = [p for i, p in _executed_writes(spark).items() if i not in before]
+    plans = [p for i, p in session.executed_write_plans(spark).items()
+             if i not in before]
     assert len([m for m in out if m.applied_rows]) >= 3
     assert len(plans) == len([m for m in out if m.applied_rows])
     for plan in plans:

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dx import manifest as mf
-from dx.dedup import dedup_max_lsn
+from dx.dedup import dedup_bucket_window, dedup_max_lsn
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
 from dx.generator import (
     DDLSpec,
@@ -48,13 +48,17 @@ def test_dedup_strategies_agree(spark, changelog_df):
 
 
 def test_dedup_matches_pandas(spark, changelog_df):
+    """maxby and the engine's default bucket-window dedup keep the
+    pandas reference's per-key max-LSN rows."""
     pdf, df = changelog_df
-    got = dedup_max_lsn(df).select("repo", "path", "lsn").toPandas()
     data = pdf[pdf.op != "DDL"]
     exp = data.loc[data.groupby(["repo", "path"])["lsn"].idxmax(), ["repo", "path", "lsn"]]
-    got = got.sort_values(["repo", "path"]).reset_index(drop=True)
     exp = exp.sort_values(["repo", "path"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp.astype({"lsn": "int64"}))
+    bucketed = df.withColumn("__bucket", F.pmod(F.hash("repo", "path"), F.lit(4)))
+    for deduped in (dedup_max_lsn(df), dedup_bucket_window(bucketed, num_partitions=4)):
+        got = deduped.select("repo", "path", "lsn").toPandas()
+        got = got.sort_values(["repo", "path"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, exp.astype({"lsn": "int64"}))
 
 
 # ---------------------------------------------------------------- transforms

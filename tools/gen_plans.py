@@ -23,18 +23,6 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def last_write_plan(spark) -> str:
-    """Final (post-AQE) physical plan of the last parquet write Spark
-    ran, as its SQL status store recorded it."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    for i in reversed(range(runs.size())):
-        plan = runs.apply(i).physicalPlanDescription()
-        if "InsertIntoHadoopFsRelationCommand" in plan:
-            return plan.split("+- == Initial Plan ==")[0]
-    raise RuntimeError("no parquet write in the SQL status store")
-
-
 def grep(plan: str, *pats: str, ctx: int = 0) -> str:
     out = []
     lines = plan.splitlines()
@@ -55,7 +43,7 @@ def main() -> int:
     from dx.generator import gen_changelog, gen_seed_table
     from dx.lake import LakeTable
     from dx.queries import QUERIES
-    from dx.session import get_spark
+    from dx.session import executed_write_plans, get_spark
 
     spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
     sections: list[tuple[str, str, str]] = []
@@ -80,7 +68,8 @@ def main() -> int:
     seed_lake(spark, table, seed_df)
     ReplayEngine(spark, table, changelog_from_pandas(spark, chg),
                  delta=500).run(max_batches=1)
-    p2 = last_write_plan(spark)
+    writes = executed_write_plans(spark)
+    p2 = writes[max(writes)]
     n_ex = p2.count("Exchange")
     sections.append((
         f"An ingest batch dedups inside its write: exactly {n_ex} payload shuffle",
